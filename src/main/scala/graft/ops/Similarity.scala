@@ -35,13 +35,6 @@ object Similarity {
     * concurrency-safe (see [[opqRotation]]'s procrustes step). */
   private[ops] object SvdLock
 
-  /** The overlap-independent-jobs posture (guide §2.6) shared by
-    * every recall-verdict gate — now the engine-wide
-    * [[Concurrent.collectConcurrently]]; kept here as an alias for
-    * the verdict gates that grew up calling it by this name. */
-  private[graft] def collectConcurrently[T](stacks: Seq[() => T]): Seq[T] =
-    Concurrent.collectConcurrently(stacks)
-
   val Scale = 1000000L // 10^6 per component
 
   /** Quantize float vector → exact scaled BIGINT vector. */
@@ -112,12 +105,6 @@ object Similarity {
     floor(array_max(zip_with(q, v, (qi, x) =>
       abs(qi.cast("double") * scale / lit(127.0) - x.cast("double"))))
       * lit(1000000.0)).cast("long")
-
-  /** Convenience form; see [[quantizeInt8With]] for the hot-path rule. */
-  def int8ErrMicro(v: Column): Column = {
-    val s = int8Scale(v)
-    int8ErrMicroWith(v, quantizeInt8With(v, s), s)
-  }
 
   /** DuckDB mirrors of the int8 family (same operand order). */
   def int8ScaleSql(vExpr: String): String =
@@ -1563,11 +1550,12 @@ object Similarity {
       val rq = queries.select(col(qId), opqRotate(col(qVec), r).as(qVec))
       pairsOf(pqTopK(rq, qId, qVec, rc, cId, cVec, m, k, iters, topK))
     }
-    val Seq(exactRaw, learnedPairs, permPairs) = collectConcurrently(Seq(
-      () => pairsOf(
-        bruteTopK(queries, qId, qVec, vCorpus, cId, cVec, topK)),
-      () => annPairs(learned),
-      () => annPairs(pMat)))
+    val Seq(exactRaw, learnedPairs, permPairs) =
+      Concurrent.collectConcurrently(Seq(
+        () => pairsOf(
+          bruteTopK(queries, qId, qVec, vCorpus, cId, cVec, topK)),
+        () => annPairs(learned),
+        () => annPairs(pMat)))
     val exactSet = exactRaw.toSet
     val r =
       if (learnedPairs.count(exactSet) > permPairs.count(exactSet)) learned
@@ -1607,21 +1595,6 @@ object Similarity {
       .filter(p => p.getName.startsWith(PqBooksPrefix) &&
         fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
       .map(_.getName).sorted.toIndexedSeq
-  }
-
-  /** Load the newest committed PQ books, shaped for [[pqEncode]] /
-    * [[PqLut]]. Fails loudly when nothing has been trained. */
-  def loadLatestPqBooks(spark: SparkSession,
-                        artifactsRoot: String): Seq[Seq[Seq[Long]]] = {
-    val versions = listPqBooks(spark, artifactsRoot)
-    if (versions.isEmpty)
-      throw new java.io.FileNotFoundException(
-        s"No committed PQ books in '$artifactsRoot'. " +
-          "Run pqCodebooks + savePqBooks first.")
-    spark.read.parquet(s"$artifactsRoot/${versions.last}")
-      .orderBy("sub", "cent_idx").collect().toIndexedSeq
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.map(_.getSeq[Long](2).toIndexedSeq).toIndexedSeq)
   }
 
   /** ANN top-k via IVF (inverted-file index) — the second index family

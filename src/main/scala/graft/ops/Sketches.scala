@@ -32,20 +32,6 @@ object Sketches {
 
   val DefaultLgK = 12
 
-  /** Per-group HLL sketches of `of` as a binary column `sketch` —
-    * the storable/mergeable profile artifact. */
-  def hllProfile(df: DataFrame, groupCols: Seq[String], of: String,
-                 lgK: Int = DefaultLgK): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(hll_sketch_agg(col(of), lit(lgK)).as("sketch"))
-
-  /** Roll up stored profiles (same group columns, same lgK family)
-    * into one sketch per group — no raw-data rescan. */
-  def mergeProfiles(profiles: DataFrame,
-                    groupCols: Seq[String]): DataFrame =
-    profiles.groupBy(groupCols.map(col): _*)
-      .agg(hll_union_agg(col("sketch")).as("sketch"))
-
   /** Distinct-count estimate from a sketch column. */
   def estimate(sketch: Column): Column = hll_sketch_estimate(sketch)
 

@@ -53,13 +53,6 @@ object SpanDedup {
         .as(Seq("pos", "h")))
   }
 
-  /** Fingerprints occurring >= 2 times corpus-wide (within-doc
-    * repeats count — a span pasted twice in one document is exactly
-    * as duplicated as one shared across two). */
-  def duplicatedSpans(spans: DataFrame): DataFrame =
-    spans.groupBy("h").agg(count(lit(1)).as("cnt"))
-      .where(col("cnt") >= 2).select("h")
-
   /** Duplicated-span occurrences EXCEPT the canonical first one —
     * the keep-one-copy policy (dedup leaves each span in the corpus
     * exactly once; removing all copies would delete content no

@@ -1,10 +1,18 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{AlwaysFalse, And, Filter,
+  GreaterThanOrEqual, LessThanOrEqual, Or, StringStartsWith}
+
+import graft.sources.StatsSkipping
 
 /** Versioned parquet table store with time-travel reads — the
   * commit-log model (a log of add/remove file actions whose replay
@@ -231,70 +239,80 @@ object TableStore {
     org.apache.spark.unsafe.types.UTF8String.fromString(a).compareTo(
       org.apache.spark.unsafe.types.UTF8String.fromString(b)) <= 0
 
+  /** One column's [min, max] over `chunks` — a row group's chunk at
+    * prune time, all of a file's at write time — in the log's two
+    * shapes: plain integers as longs (Left), UTF-8 strings as
+    * untruncated strings (Right). Columns dispatch on their PHYSICAL
+    * storage; None when no chunk carries a non-null stat (an all-null
+    * column has no range), or when the storage has no order the log
+    * can carry (annotated integers, raw binary, booleans). */
+  private def chunkBounds(chunks: Seq[ColumnChunkMetaData])
+      : Option[Either[(Long, Long), (String, String)]] = {
+    val ss = chunks.map(_.getStatistics)
+      .filter(st => st != null && st.hasNonNullValue)
+      .map(st => (st.genericGetMin, st.genericGetMax))
+    def all[T](pf: PartialFunction[(Any, Any), T]) =
+      Some(ss.collect(pf)).filter(vs => vs.nonEmpty && vs.size == ss.size)
+    if (chunks.forall(ch => stringStatsType(ch.getPrimitiveType)))
+      all { case (a: Binary, b: Binary) =>
+        (a.toStringUsingUTF8, b.toStringUsingUTF8) }.map(vs => Right((
+        vs.map(_._1).reduce((a, b) => if (strLe(a, b)) a else b),
+        vs.map(_._2).reduce((a, b) => if (strLe(a, b)) b else a))))
+    else if (chunks.forall(ch => plainStatsType(ch.getPrimitiveType)))
+      all { case (a: java.lang.Number, b: java.lang.Number) =>
+        (a.longValue, b.longValue) }.map(vs =>
+        Left((vs.map(_._1).min, vs.map(_._2).max)))
+    else None
+  }
+
+  /** A [[FileEntry]] carrying `bounds` in the log's long and string
+    * maps. */
+  private def boundsEntry(path: String, rows: Long,
+      bounds: Map[String, Either[(Long, Long), (String, String)]])
+      : FileEntry = {
+    val nums = bounds.collect { case (c, Left(b)) => c -> b }
+    val strs = bounds.collect { case (c, Right(b)) => c -> b }
+    FileEntry(path, rows, nums.map(kv => kv._1 -> kv._2._1),
+      nums.map(kv => kv._1 -> kv._2._2), strs.map(kv => kv._1 -> kv._2._1),
+      strs.map(kv => kv._1 -> kv._2._2))
+  }
+
   /** Rows + per-column [min, max] per declared stats column, from the
-    * footer — one read per file, at write time only. Columns dispatch
-    * on their PHYSICAL storage: plain integers ride the long maps,
-    * UTF-8 strings ride the (truncated) string maps, and anything
-    * else — annotated storage whose raw footer values would be lies —
-    * stays a loud error. */
+    * footer — one read per file, at write time only. Plain integers
+    * ride the long maps, UTF-8 strings the (truncated) string maps,
+    * and anything else — annotated storage whose raw footer values
+    * would be lies — stays a loud error. */
   private def footerInfo(spark: SparkSession, f: Path,
-                         statsCols: Seq[String])
-      : (Long, Map[String, Long], Map[String, Long],
-         Map[String, String], Map[String, String]) = {
+                         statsCols: Seq[String]): FileEntry = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       f, spark.sparkContext.hadoopConfiguration))
     try {
-      import scala.jdk.CollectionConverters._
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
-      val nums = Map.newBuilder[String, (Long, Long)]
-      val strs = Map.newBuilder[String, (String, String)]
-      statsCols.foreach { c =>
+      val bounds = statsCols.flatMap { c =>
         val chunks = blocks.flatMap(_.getColumns.asScala)
           .filter(_.getPath.toDotString == c)
         require(rows == 0 || chunks.nonEmpty, s"stats column $c not in $f")
-        val isString = chunks.forall(ch => stringStatsType(ch.getPrimitiveType))
-        if (!isString)
+        if (!chunks.forall(ch => stringStatsType(ch.getPrimitiveType)))
           chunks.foreach(ch => require(plainStatsType(ch.getPrimitiveType),
             s"stats column $c in $f is logically annotated " +
               s"${ch.getPrimitiveType.getLogicalTypeAnnotation} — its raw " +
               "footer integers are unscaled/encoded and would plan " +
               "pruning from misinterpreted values; declare a plain " +
               "integer or string column instead"))
-        val ss = chunks.map(_.getStatistics)
-          .filter(st => st != null && st.hasNonNullValue)
+        val b = chunkBounds(chunks)
+        require(b.nonEmpty || chunks.forall(ch => ch.getStatistics == null ||
+          !ch.getStatistics.hasNonNullValue),
+          s"stats column $c in $f is neither integer- nor string-typed")
         // an all-null column has no range — omit the key; pruning
         // treats the file as unskippable for that column
-        if (ss.nonEmpty && isString) {
-          val vals = ss.map { st =>
-            (st.genericGetMin, st.genericGetMax) match {
-              case (a: org.apache.parquet.io.api.Binary,
-                    b: org.apache.parquet.io.api.Binary) =>
-                (a.toStringUsingUTF8, b.toStringUsingUTF8)
-              case other => throw new IllegalArgumentException(
-                s"stats column $c in $f is not string-typed: $other")
-            }
-          }
-          val mn = vals.map(_._1).reduce((a, b) => if (strLe(a, b)) a else b)
-          val mx = vals.map(_._2).reduce((a, b) => if (strLe(a, b)) b else a)
-          truncUpper(mx).foreach(u => strs += c -> (truncLower(mn), u))
-        } else if (ss.nonEmpty) {
-          val vals = ss.map { st =>
-            (st.genericGetMin, st.genericGetMax) match {
-              case (a: java.lang.Number, b: java.lang.Number) =>
-                (a.longValue, b.longValue)
-              case other => throw new IllegalArgumentException(
-                s"stats column $c in $f is not integer-typed: $other")
-            }
-          }
-          nums += c -> (vals.map(_._1).min, vals.map(_._2).max)
+        b.flatMap {
+          case Left(r) => Some(c -> Left(r))
+          case Right((mn, mx)) =>
+            truncUpper(mx).map(u => c -> Right((truncLower(mn), u)))
         }
       }
-      val nr = nums.result(); val sr = strs.result()
-      (rows, nr.map { case (c, r) => c -> r._1 },
-        nr.map { case (c, r) => c -> r._2 },
-        sr.map { case (c, r) => c -> r._1 },
-        sr.map { case (c, r) => c -> r._2 })
+      boundsEntry("", rows, bounds.toMap)
     } finally reader.close()
   }
 
@@ -350,14 +368,12 @@ object TableStore {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
       .map { s =>
-        val (rows, mins, maxs, smins, smaxs) =
-          footerInfo(spark, s.getPath, statsCols)
         // the listing already holds each file's length — carrying it
         // in the log makes maintenance PLANNING (compact/optimize
         // sizing) zero-IO instead of one driver stat per live file,
         // the call pattern that melts at a million files
-        FileEntry(s"$Data/$sub/${s.getPath.getName}", rows, mins, maxs,
-          smins, smaxs, s.getLen)
+        footerInfo(spark, s.getPath, statsCols).copy(
+          path = s"$Data/$sub/${s.getPath.getName}", bytes = s.getLen)
       }
       // a zero-row part (empty write task) carries no row groups —
       // it contributes nothing to any snapshot, so never log it
@@ -1029,7 +1045,7 @@ object TableStore {
     require(vs.nonEmpty, s"no committed versions at $root")
     val prev = vs.last
     val live = liveAt(spark, root, prev)
-    val touched = overlappingFiles(spark, root, live, pcol, lo, hi)
+    val touched = prune(spark, root, live, between(pcol, lo, hi))
     deleteMoRTouched(spark, root, pred, prev, touched)
   }
 
@@ -1694,9 +1710,7 @@ object TableStore {
       return commitLayoutRebasing(spark, root, prev + 1,
         Seq.empty, Seq.empty)
     }
-    val fs = fsOf(spark, new Path(root))
-    val bytes = live.map(e =>
-      sizeOf(spark, root, e)).sum
+    val bytes = live.map(e => sizeOf(spark, root, e)).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val df = readLiveFiles(spark, root, prev, live)
       .repartition(nOut)
@@ -1705,163 +1719,122 @@ object TableStore {
       writeData(df, root, n, statsCols, bloomCols), live.map(_.path))
   }
 
-  /** Live files whose [min, max] for `pcol` can intersect [lo, hi].
-    * Files whose commit DECLARED `pcol` in statsCols answer from the
-    * log alone — zero IO; files written without it fall back to one
-    * footer read each (and stat-less chunks count as overlapping).
-    * At scale the log-stats path is the only one that matters: a
-    * footer open per live file is itself a million-IO listing. */
-  private def overlappingFiles(spark: SparkSession, root: String,
-                               live: Seq[FileEntry], pcol: String,
-                               lo: Long, hi: Long): Seq[FileEntry] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // a file whose schema PREDATES the prune column provably holds
-    // only nulls for it — skippable, not an error (readAs evolution);
-    // the typo guard below still catches a column no file ever had
-    var sawColumn = live.isEmpty
-    def footerOverlap(rel: String): Boolean = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(resolve(root, rel)), conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        val blocks = reader.getFooter.getBlocks.asScala
-        val chunks = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == pcol)
-        if (chunks.nonEmpty) sawColumn = true
-        if (blocks.nonEmpty && chunks.isEmpty) return false
-        chunks.exists { c =>
-          // annotated storage (DECIMAL/DATE over ints): stats can't be
-          // interpreted against the caller's [lo, hi] — never skip
-          !plainStatsType(c.getPrimitiveType) || {
-          val s = c.getStatistics
-          s == null || !s.hasNonNullValue || {
-            val (mn, mx) = (s.genericGetMin, s.genericGetMax) match {
-              case (a: java.lang.Number, b: java.lang.Number) =>
-                (a.longValue, b.longValue)
-              case _ => (Long.MinValue, Long.MaxValue)
-            }
-            mn <= hi && mx >= lo
-          }
-        }}
-      } finally reader.close()
+  /** `pcol ∈ [lo, hi]` as a pushdown filter. */
+  private def between(pcol: String, lo: Any, hi: Any): Filter =
+    And(GreaterThanOrEqual(pcol, lo), LessThanOrEqual(pcol, hi))
+
+  /** `f` over a row group that lacks the columns outside `present`:
+    * such a column holds only nulls there, so every comparison leaf
+    * on it ([[StatsSkipping.usable]] — each rejects nulls) is
+    * provably false. Other leaves stay, and answer "maybe". */
+  private def absentAsFalse(f: Filter, present: Set[String]): Filter =
+    f match {
+      case And(l, r) => And(absentAsFalse(l, present), absentAsFalse(r, present))
+      case Or(l, r) => Or(absentAsFalse(l, present), absentAsFalse(r, present))
+      case leaf if !leaf.references.forall(present) &&
+          StatsSkipping.usable(leaf) => AlwaysFalse
+      case leaf => leaf
     }
+
+  /** The store's one file prune: the live files that can hold a row
+    * matching `f`, judged by [[StatsSkipping.mayContain]]. A file
+    * whose commit log carries bounds for every column `f` names
+    * answers from the log alone — zero IO, the only path that matters
+    * at scale (a footer open per live file is itself a million-IO
+    * listing). Any other file opens its footer once and runs the same
+    * evaluator on each row group's footer bounds; it survives if any
+    * row group does. A file whose schema PREDATES a column provably
+    * holds only nulls for it — skippable, not an error (readAs
+    * evolution) — but a column NO live file has is a loud typo. A
+    * filter the evaluator cannot use keeps every live file and reads
+    * no footer. */
+  private def prune(spark: SparkSession, root: String,
+                    live: Seq[FileEntry], f: Filter): Seq[FileEntry] = {
+    if (!StatsSkipping.usable(f)) return live
+    val cols = f.references.toSet
+    val seen = scala.collection.mutable.Set[String]()
+    def logged(e: FileEntry, c: String) =
+      e.mins.contains(c) || e.smins.contains(c)
+    val conf = spark.sparkContext.hadoopConfiguration
     val hits = live.filter { e =>
-      (e.mins.get(pcol), e.maxs.get(pcol)) match {
-        case (Some(mn), Some(mx)) => sawColumn = true; mn <= hi && mx >= lo
-        case _ => footerOverlap(e.path)
+      if (cols.forall(logged(e, _))) {
+        seen ++= cols
+        StatsSkipping.mayContain(e, f)
+      } else {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new Path(resolve(root, e.path)), conf))
+        try reader.getFooter.getBlocks.asScala.exists { block =>
+          val chunks = block.getColumns.asScala.toSeq
+            .filter(ch => cols(ch.getPath.toDotString))
+          val present = chunks.map(_.getPath.toDotString).toSet
+          seen ++= present
+          val bounds = chunks.flatMap(ch =>
+            chunkBounds(Seq(ch)).map(ch.getPath.toDotString -> _))
+          StatsSkipping.mayContain(
+            boundsEntry(e.path, block.getRowCount, bounds.toMap),
+            absentAsFalse(f, present))
+        } finally reader.close()
       }
     }
-    require(sawColumn,
-      s"prune column $pcol exists in NO live file of $root — " +
-        "misspelled column, not an evolved one")
+    val missing = cols -- seen
+    require(live.isEmpty || missing.isEmpty,
+      s"prune column ${missing.mkString(",")} exists in NO live file of " +
+        s"$root — misspelled column, not an evolved one")
     hits
+  }
+
+  /** Probe keys as ONE key type — all integral or all strings, the
+    * [[StatsSkipping]] dispatch; anything else is a loud error. */
+  private def keyTyped(op: String, values: Seq[Any])
+      : Either[Seq[Long], Seq[String]] = {
+    val longs = values.flatMap(StatsSkipping.asLong)
+    val strs = values.flatMap(StatsSkipping.asString)
+    if (longs.size == values.size) Left(longs)
+    else {
+      require(strs.size == values.size,
+        s"$op keys must be all integral or all strings: " +
+          values.mkString(", "))
+      Right(strs)
+    }
+  }
+
+  /** The pruned read every probe verb shares: resolve the snapshot,
+    * refuse delete vectors (file-granularity planning would resurrect
+    * vectored rows), [[prune]] by `f`, keep the survivors `keep`
+    * admits, and apply the `residual` row filter — a typed-empty
+    * frame when nothing survives. Returns the frame plus the
+    * (files touched, files live) evidence pair — the skipping
+    * economics a layout is judged by. */
+  private def prunedRead(spark: SparkSession, root: String,
+                         version: Option[Long], f: Filter, residual: Column,
+                         keep: FileEntry => Boolean): (DataFrame, Int, Int) = {
+    val vs = versions(spark, root)
+    require(vs.nonEmpty, s"no committed versions at $root")
+    val v = version.getOrElse(vs.max)
+    val live = liveAt(spark, root, v)
+    requireNoDvs(spark, root, v, live, "stats- and bloom-pruned reads")
+    val touched = prune(spark, root, live, f).filter(keep)
+    val df =
+      if (touched.nonEmpty) readLiveFiles(spark, root, v, touched).where(residual)
+      else read(spark, root, version).where(residual).limit(0)
+    (df, touched.size, live.size)
   }
 
   /** Manifest-pruned range read: open only the live files whose
-    * footer stats can contain `pcol` ∈ [lo, hi], then apply the
-    * residual row filter. Returns the frame plus the
-    * (files touched, files live) evidence pair — the skipping
-    * economics a layout is judged by. On a store whose commits are
-    * key-ranged (the natural shape of range-partitioned ingestion),
-    * a point probe opens one commit's files, never the table. */
+    * bounds can contain `pcol` ∈ [lo, hi], then apply the residual
+    * row filter. Bounds are both integral or both strings; strings
+    * compare in Spark's string order, the shape for tables ingested
+    * in key order on URLs, content hashes or date-string keys. On a
+    * store whose commits are key-ranged (the natural shape of
+    * range-partitioned ingestion), a point probe opens one commit's
+    * files, never the table. Returns the frame plus
+    * (files touched, files live). */
   def readRange(spark: SparkSession, root: String,
-                pcol: String, lo: Long, hi: Long,
+                pcol: String, lo: Any, hi: Any,
                 version: Option[Long] = None): (DataFrame, Int, Int) = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    val touched = overlappingFiles(spark, root, live, pcol, lo, hi)
-    val residual = col(pcol) >= lo && col(pcol) <= hi
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
-  }
-
-  /** Live files whose string [min, max] for `pcol` can intersect
-    * [lo, hi] (either side unbounded as None), compared in Spark's
-    * string order. Files whose commit DECLARED `pcol` in statsCols
-    * answer from the log alone — zero IO; files written without it
-    * fall back to one footer read each. Truncated log bounds only
-    * ever WIDEN a file's range, so pruning stays sound. */
-  private def overlappingFilesString(spark: SparkSession, root: String,
-                                     live: Seq[FileEntry], pcol: String,
-                                     lo: Option[String],
-                                     hi: Option[String]): Seq[FileEntry] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def overlaps(mn: String, mx: String): Boolean =
-      lo.forall(l => strLe(l, mx)) && hi.forall(h => strLe(mn, h))
-    // a file whose schema PREDATES the prune column provably holds
-    // only nulls for it — skippable, not an error (readAs evolution)
-    var sawColumn = live.isEmpty
-    def footerOverlap(rel: String): Boolean = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(resolve(root, rel)), conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        val blocks = reader.getFooter.getBlocks.asScala
-        val chunks = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == pcol)
-        if (chunks.nonEmpty) sawColumn = true
-        if (blocks.nonEmpty && chunks.isEmpty) return false
-        chunks.exists { c =>
-          // non-string storage: the caller's string bounds can't be
-          // compared against these stats — never skip
-          !stringStatsType(c.getPrimitiveType) || {
-            val s = c.getStatistics
-            s == null || !s.hasNonNullValue || {
-              (s.genericGetMin, s.genericGetMax) match {
-                case (a: org.apache.parquet.io.api.Binary,
-                      b: org.apache.parquet.io.api.Binary) =>
-                  overlaps(a.toStringUsingUTF8, b.toStringUsingUTF8)
-                case _ => true
-              }
-            }
-          }
-        }
-      } finally reader.close()
-    }
-    val hits = live.filter { e =>
-      (e.smins.get(pcol), e.smaxs.get(pcol)) match {
-        case (Some(mn), Some(mx)) => sawColumn = true; overlaps(mn, mx)
-        case _ => footerOverlap(e.path)
-      }
-    }
-    require(sawColumn,
-      s"prune column $pcol exists in NO live file of $root — " +
-        "misspelled column, not an evolved one")
-    hits
-  }
-
-  /** Manifest-pruned range read over a STRING key: open only the live
-    * files whose (truncated) string bounds can contain `pcol` ∈
-    * [lo, hi] in Spark's string order, then apply the residual row
-    * filter. Returns the frame plus the (files touched, files live)
-    * evidence pair. The string twin of [[readRange]] — the shape for
-    * tables ingested in key order on URLs, content hashes, or
-    * date-string keys, where the pruning column can't be an integer. */
-  def readRangeString(spark: SparkSession, root: String,
-                      pcol: String, lo: String, hi: String,
-                      version: Option[Long] = None)
-      : (DataFrame, Int, Int) = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    val touched = overlappingFilesString(spark, root, live, pcol,
-      Some(lo), Some(hi))
-    val residual = col(pcol) >= lit(lo) && col(pcol) <= lit(hi)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
+    val Seq(l, h) = keyTyped("readRange", Seq(lo, hi)).merge
+    prunedRead(spark, root, version, between(pcol, l, h),
+      col(pcol) >= lit(l) && col(pcol) <= lit(h), _ => true)
   }
 
   /** Exclusive upper bound for "starts with `prefix`": bump the
@@ -1885,190 +1858,66 @@ object TableStore {
                  pcol: String, prefix: String,
                  version: Option[Long] = None): (DataFrame, Int, Int) = {
     require(prefix.nonEmpty, "readPrefix needs a non-empty prefix")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    // [prefix, successor): a file overlaps iff its max reaches the
-    // prefix and its min stays below the successor (strictly — but
-    // <= on the successor only ever ADDS a file, never loses one)
-    val touched = overlappingFilesString(spark, root, live, pcol,
-      Some(prefix), prefixSuccessor(prefix))
-    val residual = col(pcol).startsWith(prefix)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
+    prunedRead(spark, root, version, StringStartsWith(pcol, prefix),
+      col(pcol).startsWith(prefix), _ => true)
   }
 
-  /** Whether the file might contain ANY of `values` in `pcol`:
-    * Some(true/false) from its parquet bloom, None when the file's
-    * schema predates the column entirely (only nulls — provably no
-    * match, but the caller tracks presence for the typo guard).
-    * Blocks without a bloom can't be skipped and count as maybe.
-    * Probe hashes follow the column's PHYSICAL type — a bloom over
-    * INT32 was built from 4-byte hashes, and probing it with longs
-    * would be a false NEGATIVE on every key (silent row loss). */
-  private def bloomMayContain(spark: SparkSession, root: String,
+  /** Whether any row group of the file might hold one of `keys` in
+    * `pcol`, by its parquet bloom. Probe hashes follow the column's
+    * PHYSICAL type — INT64, INT32 or BINARY-UTF8: a bloom over INT32
+    * was built from 4-byte hashes, and probing it with long hashes
+    * would be a false NEGATIVE on every key (silent row loss). A row
+    * group without the column holds only nulls (no match); one
+    * without a bloom, or whose type does not match the keys', answers
+    * maybe. */
+  private def bloomMayHold(spark: SparkSession, root: String,
                               rel: String, pcol: String,
-                              values: Seq[Long]): Option[Boolean] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+                              keys: Either[Seq[Long], Seq[String]]): Boolean = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       new Path(resolve(root, rel)), spark.sparkContext.hadoopConfiguration))
-    try {
-      import scala.jdk.CollectionConverters._
-      var saw = false
-      val may = reader.getFooter.getBlocks.asScala.exists { block =>
-        block.getColumns.asScala
-          .find(_.getPath.toDotString == pcol) match {
-          case None => false // only nulls here: cannot match a value
-          case Some(cc) =>
-            saw = true
-            val bf = reader.getBloomFilterDataReader(block)
-              .readBloomFilter(cc)
-            bf == null || {
-              val hash: Long => Long =
-                cc.getPrimitiveType.getPrimitiveTypeName match {
-                  case PrimitiveTypeName.INT64 =>
-                    v => bf.hash(java.lang.Long.valueOf(v))
-                  case PrimitiveTypeName.INT32 =>
-                    v => bf.hash(java.lang.Integer.valueOf(v.toInt))
-                  case _ => return Some(true) // unsupported: maybe
-                }
-              values.exists(v => bf.findHash(hash(v)))
-            }
+    try reader.getFooter.getBlocks.asScala.exists { block =>
+      block.getColumns.asScala.find(_.getPath.toDotString == pcol)
+        .exists { cc =>
+          val bf = reader.getBloomFilterDataReader(block).readBloomFilter(cc)
+          val pt = cc.getPrimitiveType
+          bf == null || ((pt.getPrimitiveTypeName, keys) match {
+            case (INT64, Left(ls)) =>
+              ls.exists(v => bf.findHash(bf.hash(java.lang.Long.valueOf(v))))
+            case (INT32, Left(ls)) =>
+              ls.exists(v => bf.findHash(bf.hash(Integer.valueOf(v.toInt))))
+            case (BINARY, Right(ss)) if stringStatsType(pt) =>
+              ss.exists(v => bf.findHash(bf.hash(Binary.fromString(v))))
+            case _ => true
+          })
         }
-      }
-      if (!saw && !may) None else Some(may)
     } finally reader.close()
   }
 
   /** Point lookup with BLOOM skipping — the prune min/max ranges
     * cannot make: when every file spans the whole key space (hash-
-    * distributed ingest, the usual shape for high-cardinality ids),
-    * range stats skip nothing, but a per-file bloom written at
-    * commit time ([[append]]'s `bloomCols`) skips every file that
-    * provably lacks all probed keys at ~one footer+bloom-page read
-    * per range-surviving file. Two-level prune: log-carried ranges
-    * first (zero IO), blooms on the survivors. Returns the frame
-    * plus (files touched, files live). False positives only ever ADD
-    * a file — never lose a row; the residual isin filter keeps the
-    * result exact either way. */
+    * distributed ingest, the usual shape for high-cardinality ids:
+    * URLs, content hashes, doc ids), range bounds skip nothing, but a
+    * per-file bloom written at commit time ([[append]]'s `bloomCols`)
+    * skips every file that provably lacks all probed keys at ~one
+    * footer+bloom-page read per range-surviving file. Keys are all
+    * integral or all strings. Two-level prune: the keys' [min, max]
+    * span first ([[prune]] — log bounds at zero IO), blooms on the
+    * survivors. Returns the frame plus (files touched, files live).
+    * False positives only ever ADD a file — never lose a row; the
+    * residual isin filter keeps the result exact either way. */
   def pointLookup(spark: SparkSession, root: String,
-                  pcol: String, values: Seq[Long],
+                  pcol: String, values: Seq[Any],
                   version: Option[Long] = None): (DataFrame, Int, Int) = {
     require(values.nonEmpty, "pointLookup needs at least one value")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    // files with log-carried stats range-prune for free; files
-    // without go straight to the bloom (the range check would open
-    // the same footer the bloom read is about to — one IO, not two)
-    val (logged, bare) = live.partition(_.mins.contains(pcol))
-    val ranged = overlappingFiles(spark, root, logged, pcol,
-      values.min, values.max) ++ bare
-    var sawColumn = logged.nonEmpty || live.isEmpty
-    val touched = ranged.filter { e =>
-      bloomMayContain(spark, root, e.path, pcol, values) match {
-        case Some(m) => sawColumn = true; m
-        case None => false // schema predates the column: only nulls
-      }
-    }
-    require(sawColumn || bare.isEmpty,
-      s"lookup column $pcol exists in NO live file of $root — " +
-        "misspelled column, not an evolved one")
-    val residual = col(pcol).isin(values: _*)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
-  }
-
-  /** Whether the file might contain ANY of the STRING `values` in
-    * `pcol`, via its parquet bloom over the column's BINARY (UTF-8)
-    * representation. Some(true/false) from the bloom; None when the
-    * file's schema predates the column (only nulls — provably no
-    * match). A non-BINARY physical type means the probe's hashing
-    * assumption is wrong — never skip (Some(true)), exactness is
-    * preserved by the residual filter. */
-  private def stringBloomMayContain(spark: SparkSession, root: String,
-                                    rel: String, pcol: String,
-                                    values: Seq[String])
-      : Option[Boolean] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new Path(resolve(root, rel)), spark.sparkContext.hadoopConfiguration))
-    try {
-      import scala.jdk.CollectionConverters._
-      var saw = false
-      val may = reader.getFooter.getBlocks.asScala.exists { block =>
-        block.getColumns.asScala
-          .find(_.getPath.toDotString == pcol) match {
-          case None => false // only nulls here: cannot match a value
-          case Some(cc) =>
-            saw = true
-            if (cc.getPrimitiveType.getPrimitiveTypeName !=
-                PrimitiveTypeName.BINARY) return Some(true)
-            val bf = reader.getBloomFilterDataReader(block)
-              .readBloomFilter(cc)
-            bf == null || values.exists(v => bf.findHash(bf.hash(
-              org.apache.parquet.io.api.Binary.fromString(v))))
-        }
-      }
-      if (!saw && !may) None else Some(may)
-    } finally reader.close()
-  }
-
-  /** [[pointLookup]] for STRING keys — the high-cardinality id shape
-    * of document stores (URLs, content hashes, doc ids): integer
-    * range stats can't carry strings, so every live file goes
-    * straight to its bloom, and files written with `bloomCols` on
-    * the string column skip at ~one footer+bloom-page read each.
-    * False positives only ever ADD a file; the residual isin keeps
-    * the result exact. Returns the frame plus the
-    * (files touched, files live) economics pair. */
-  def pointLookupString(spark: SparkSession, root: String,
-                        pcol: String, values: Seq[String],
-                        version: Option[Long] = None)
-      : (DataFrame, Int, Int) = {
-    require(values.nonEmpty, "pointLookupString needs at least one value")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    // two-level prune, the numeric pointLookup posture: files with
-    // log-carried string ranges prune for free (zero IO); survivors
-    // and stat-less files go to their blooms
-    val vmin = values.reduce((a, b) => if (strLe(a, b)) a else b)
-    val vmax = values.reduce((a, b) => if (strLe(a, b)) b else a)
-    val (logged, bare) = live.partition(_.smins.contains(pcol))
-    val ranged = logged.filter(e =>
-      strLe(e.smins(pcol), vmax) && strLe(vmin, e.smaxs(pcol))) ++ bare
-    var sawColumn = logged.nonEmpty || live.isEmpty
-    val touched = ranged.filter { e =>
-      stringBloomMayContain(spark, root, e.path, pcol, values) match {
-        case Some(m) => sawColumn = true; m
-        case None => false // schema predates the column: only nulls
-      }
-    }
-    require(sawColumn || bare.isEmpty,
-      s"lookup column $pcol exists in NO live file of $root — " +
-        "misspelled column, not an evolved one")
-    val residual = col(pcol).isin(values: _*)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
+    val keys = keyTyped("pointLookup", values)
+    val (lo, hi) = keys.fold(
+      ls => (ls.min, ls.max),
+      ss => (ss.reduce((a, b) => if (strLe(a, b)) a else b),
+        ss.reduce((a, b) => if (strLe(a, b)) b else a)))
+    prunedRead(spark, root, version, between(pcol, lo, hi),
+      col(pcol).isin(keys.merge: _*),
+      e => bloomMayHold(spark, root, e.path, pcol, keys))
   }
 
   /** Exactly-once streaming append: commit `df` as a new version
@@ -2136,12 +1985,9 @@ object TableStore {
     val prev = vs.last
     val live = liveAt(spark, root, prev)
     requireNoDvs(spark, root, prev, live, "compactSmall")
-    val fs = fsOf(spark, new Path(root))
-    val small = live.filter(e =>
-      sizeOf(spark, root, e) < smallBytes)
+    val small = live.filter(e => sizeOf(spark, root, e) < smallBytes)
     if (small.size < 2) return prev // nothing worth merging
-    val bytes = small.map(e =>
-      sizeOf(spark, root, e)).sum
+    val bytes = small.map(e => sizeOf(spark, root, e)).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val df = readLiveFiles(spark, root, prev, small)
       .repartition(nOut)
@@ -2222,7 +2068,7 @@ object TableStore {
     val prev = vs.last
     val liveNow = liveAt(spark, root, prev)
     requireNoDvs(spark, root, prev, liveNow, "deleteWhere")
-    val touched = overlappingFiles(spark, root, liveNow, pcol, lo, hi)
+    val touched = prune(spark, root, liveNow, between(pcol, lo, hi))
     if (touched.isEmpty) return prev
     // keep a row unless the predicate is DEFINITELY true: under
     // three-valued logic `!pred` drops NULL-valued rows the caller
@@ -2299,7 +2145,7 @@ object TableStore {
           "slice must contain only rows it replaces, or re-runs " +
           "duplicate")
     }
-    val touched = overlappingFiles(spark, root, live, pcol, lo, hi)
+    val touched = prune(spark, root, live, between(pcol, lo, hi))
     val kept =
       if (touched.isEmpty) df.limit(0).select(store.columns.map(col): _*)
       else readLiveFiles(spark, root, prev, touched)
@@ -2424,22 +2270,14 @@ object TableStore {
         s"[${store.columns.sorted.mkString(",")}]")
     require(inserts.columns.contains(key), s"$opName key $key not in batch")
     val aligned = inserts.select(store.columns.map(col): _*)
-    import org.apache.spark.sql.types._
     // level 1: log-stats prune on the batch's key span (one agg job,
-    // or zero when the caller's batch screen already computed it)
+    // or zero when the caller's batch screen already computed it);
+    // a key type the evaluator can't order keeps every live file
     val span = precomputedSpan.getOrElse(
       keyRows.agg(min(col(key)), max(col(key))).collect()(0))
     val candidates: Seq[FileEntry] =
       if (span.isNullAt(0)) Seq.empty // no non-null keys: no matches
-      else keyRows.schema(key).dataType match {
-        case ByteType | ShortType | IntegerType | LongType =>
-          overlappingFiles(spark, root, live, key,
-            span.getAs[Number](0).longValue, span.getAs[Number](1).longValue)
-        case StringType =>
-          overlappingFilesString(spark, root, live, key,
-            Some(span.getString(0)), Some(span.getString(1)))
-        case _ => live // unpruneable key type: exact scan decides
-      }
+      else prune(spark, root, live, between(key, span.get(0), span.get(1)))
     val keys = keyRows.select(col(key).as("__merge_key"))
       .where(col("__merge_key").isNotNull).distinct()
     // level 2: exact touched-file discovery — bounded by file count.
@@ -2580,25 +2418,6 @@ object TableStore {
   def readAt(spark: SparkSession, root: String,
              tsMillis: Long): DataFrame =
     read(spark, root, Some(versionAt(spark, root, tsMillis)))
-
-  /** Time-based retention — the operational dial ("keep 7 days")
-    * composed from [[versionAt]]'s publish-time model and [[vacuum]]:
-    * retire every version published before `cutoffMillis`, always
-    * keeping the latest. The caller computes the cutoff (now minus
-    * the retention window), which keeps this deterministic and
-    * testable; the vacuum caveats (checkpoint at the horizon,
-    * in-flight-writer safety, pinned readers fail loudly past the
-    * horizon) apply unchanged. */
-  def vacuumOlderThan(spark: SparkSession, root: String,
-                      cutoffMillis: Long): Unit = {
-    val vs = versions(spark, root)
-    if (vs.isEmpty) return
-    val fs = fsOf(spark, new Path(s"$root/$Log"))
-    val keep = vs.count(v =>
-      fs.getFileStatus(new Path(s"$root/$Log/v=$v"))
-        .getModificationTime >= cutoffMillis)
-    vacuum(spark, root, keepVersions = math.max(1, keep))
-  }
 
   /** CHECK constraints active at `asOf`: (name, boolean SQL expr)
     * pairs, latest declaration per name wins, drops remove. Replayed
@@ -2789,9 +2608,7 @@ object TableStore {
       return commitLayoutRebasing(spark, root, prev + 1,
         Seq.empty, Seq.empty)
     }
-    val fs = fsOf(spark, new Path(root))
-    val bytes = live.map(e =>
-      sizeOf(spark, root, e)).sum
+    val bytes = live.map(e => sizeOf(spark, root, e)).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val df = readLiveFiles(spark, root, prev, live)
       .repartitionByRange(nOut, col(clusterCol))
@@ -2828,7 +2645,7 @@ object TableStore {
     val prev = vs.last
     val live = liveAt(spark, root, prev)
     requireNoDvs(spark, root, prev, live, "optimizeLayoutWhere")
-    val touched = overlappingFiles(spark, root, live, clusterCol, lo, hi)
+    val touched = prune(spark, root, live, between(clusterCol, lo, hi))
     if (touched.size < 2) return prev
     val bytes = touched.map(e => sizeOf(spark, root, e)).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -2872,9 +2689,7 @@ object TableStore {
       return commitLayoutRebasing(spark, root, prev + 1,
         Seq.empty, Seq.empty)
     }
-    val fs = fsOf(spark, new Path(root))
-    val bytes = live.map(e =>
-      sizeOf(spark, root, e)).sum
+    val bytes = live.map(e => sizeOf(spark, root, e)).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val key = Layout.hilbertValue(col(xCol), col(yCol), bits)
     val df = readLiveFiles(spark, root, prev, live)
@@ -2899,21 +2714,10 @@ object TableStore {
               version: Option[Long] = None): (DataFrame, Int, Int) = {
     require(x._2 <= x._3 && y._2 <= y._3,
       s"empty box [${x._2},${x._3}]×[${y._2},${y._3}]")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    val xPass = overlappingFiles(spark, root, live, x._1, x._2, x._3)
-    val touched = overlappingFiles(spark, root, xPass, y._1, y._2, y._3)
-    val residual = col(x._1).between(x._2, x._3) &&
-      col(y._1).between(y._2, y._3)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
+    prunedRead(spark, root, version,
+      And(between(x._1, x._2, x._3), between(y._1, y._2, y._3)),
+      col(x._1).between(x._2, x._3) && col(y._1).between(y._2, y._3),
+      _ => true)
   }
 
   /** Zero-mutation VACUUM DRY RUN — what [[vacuum]](keepVersions)

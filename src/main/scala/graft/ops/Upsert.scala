@@ -25,8 +25,8 @@ object Upsert {
     *        conflict; all other non-key columns keep `existing` values.
     * @param conflictOverrides extra per-column expressions applied only
     *        on conflict (reference sets record_type='updated' there).
-    *        Expressions may reference `_i_<col>` / `_e_<col>` prefixed
-    *        inputs via the provided builders.
+    *        Expressions may reference the `_i_<col>` (incoming) and
+    *        `_e_<col>` (existing) prefixed inputs.
     */
   def merge(
       existing: DataFrame,
@@ -62,10 +62,6 @@ object Upsert {
       }
     }: _*)
   }
-
-  /** Reference existing/incoming column inside a conflictOverride. */
-  def incomingCol(c: String): Column = col(s"_i_$c")
-  def existingCol(c: String): Column = col(s"_e_$c")
 
   /** Delete+insert upsert (J4, reference transactional reprocessing:
     * dags/Reprocessing.py:113-126): rows whose key appears in `fixed`

@@ -41,9 +41,6 @@ object Validate {
   def bad(annotated: DataFrame): DataFrame =
     annotated.filter(col("error_details") =!= "")
 
-  /** Error-rate circuit breaker (reference: 10% threshold,
-    * dags/DataWarehouse.py:456-482). Single-pass aggregate; the only
-    * driver-side value is the tiny scalar. */
   /** One-pass (total, bad) counters over an annotated frame. */
   def counts(annotated: DataFrame): (Long, Long) = {
     val r = annotated.agg(
@@ -52,13 +49,11 @@ object Validate {
     (r.getLong(0), r.getLong(1))
   }
 
-  def errorRatePct(annotated: DataFrame): Double = {
-    val (total, bad) = counts(annotated)
-    if (total == 0) 0.0 else bad * 100.0 / total
-  }
-
-  /** Halt-or-clean gate: error rate above threshold throws BEFORE any
-    * destructive step (reference halt ordering, §7.4). */
+  /** Error-rate circuit breaker (reference: 10% threshold,
+    * dags/DataWarehouse.py:456-482), a halt-or-clean gate: an error
+    * rate above threshold throws BEFORE any destructive step
+    * (reference halt ordering, §7.4). Single-pass aggregate; the only
+    * driver-side value is the tiny scalar. */
   def gate(annotated: DataFrame, thresholdPct: Double = 10.0): DataFrame =
     gateCounted(annotated, thresholdPct)._1
 

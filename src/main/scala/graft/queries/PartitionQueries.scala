@@ -548,7 +548,7 @@ object PartitionQueries extends QueryPack {
     eager = true)
 
   /** String-key bloom point lookups
-    * ([[graft.ops.TableStore.pointLookupString]]): documents keyed by
+    * ([[graft.ops.TableStore.pointLookup]]): documents keyed by
     * a derived string id land in three bloom-indexed commits split by
     * doc_id range — every probe key lives in ONE commit's file, so
     * the bloom walk must answer from a strict subset of the live set
@@ -576,7 +576,7 @@ object PartitionQueries extends QueryPack {
       // raw n/m ids can land in all three classes at some SFs
       val probes = Seq(3L, 6L, 9L)
         .map(m => n / m - (n / m % 3)).distinct.map(v => s"doc:$v")
-      val (df, touched, total) = graft.ops.TableStore.pointLookupString(
+      val (df, touched, total) = graft.ops.TableStore.pointLookup(
         s, root, "k", probes)
       require(total == 0 || touched < total,
         s"string blooms must skip at least one commit: $touched/$total")

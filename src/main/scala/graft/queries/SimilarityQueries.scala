@@ -42,7 +42,7 @@ object SimilarityQueries extends QueryPack {
       df.select("query_id", "neighbour_id").collect().toSeq
         .map(r => (r.getLong(0), r.getLong(1)))
     val Seq(ex, paRaw, pbRaw) =
-      graft.ops.Similarity.collectConcurrently(Seq(
+      graft.ops.Concurrent.collectConcurrently(Seq(
         () => pairs(exact), () => pairs(annA), () => pairs(annB)))
     val pa = paRaw.toSet
     val pb = pbRaw.toSet
@@ -351,13 +351,13 @@ object SimilarityQueries extends QueryPack {
       // by construction), scored on the driver — the join shape
       // re-executed the int8 stack and the exact baseline twice per
       // sink; the three stacks are independent and run concurrently
-      // through the shared [[graft.ops.Similarity.collectConcurrently]]
+      // through the shared [[graft.ops.Concurrent.collectConcurrently]]
       // (the recallLiftTable posture)
       def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
         df.select("query_id", "neighbour_id").collect().toSeq
           .map(r => (r.getLong(0), r.getLong(1)))
       val Seq(ap, fvRaw, ex) =
-        graft.ops.Similarity.collectConcurrently(Seq(
+        graft.ops.Concurrent.collectConcurrently(Seq(
           () => pairs(Similarity.ivfTopKInt8(
             q, "vec_id", "embedding", emb, "vec_id", "embedding",
             TopK, NumCentroids, NProbe)),
@@ -1069,7 +1069,7 @@ object SimilarityQueries extends QueryPack {
           : (Long, Long, Long) = {
         val queries = corpus.filter(expr(RotQueryPred))
         val Seq(ex, pq, pm, rt) =
-          graft.ops.Similarity.collectConcurrently(Seq(
+          graft.ops.Concurrent.collectConcurrently(Seq(
             () => pairSeq(Similarity.bruteTopK(queries,
               "vec_id", "embedding", corpus, "vec_id", "embedding",
               TopK)),
@@ -1089,7 +1089,7 @@ object SimilarityQueries extends QueryPack {
         (rc(pq.toSet), rc(pm.toSet), rc(rt.toSet))
       }
       val Seq((pqS, permS, rotS), (pqC, permC, rotC)) =
-        graft.ops.Similarity.collectConcurrently(Seq(
+        graft.ops.Concurrent.collectConcurrently(Seq(
           () => measure(skewed), () => measure(correlated)))
       require(rotS >= permS && rotC >= permC,
         s"the learned rotation must never regress its permutation " +

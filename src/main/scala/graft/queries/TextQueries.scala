@@ -706,9 +706,7 @@ object TextQueries extends QueryPack {
     (s, d) => {
       val dir = graft.TempRoots
         .create("graft_bpe") + "/model"
-      // hash-spread: BPE's word fold is one heavy scan-side pass
-      // over a single-row-group file (Tables.spread scaladoc)
-      val docs = Tables.spread(s, Tables.documents(s, d), "doc_id")
+      val docs = Tables.documents(s, d)
       graft.ops.Vocab.bpeSaveModel(docs, "text", rounds = 3, dir)
       graft.ops.Vocab.bpeEncode(docs, "doc_id", "text", dir)
         .orderBy("doc_id")

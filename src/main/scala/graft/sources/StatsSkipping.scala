@@ -5,27 +5,27 @@ import org.apache.spark.sql.sources._
 import graft.ops.TableStore
 import graft.ops.TableStore.FileEntry
 
-/** Log-stats file skipping for the SQL surface: decide, from the
-  * commit log's per-file bounds ALONE (zero data IO), whether a file
-  * can possibly hold a row satisfying a pushed-down filter. This is
-  * the same evidence [[TableStore.readRange]]/`readPrefix` consult —
-  * re-expressed over Spark's `sources.Filter` ADT so one evaluator
-  * serves both the DSv2 pushdown path and the [[GraftFileIndex]]
-  * native-scan path (which translates its Catalyst filters to the
-  * same ADT).
+/** The store's one bound evaluator: decide, from a file's [min, max]
+  * bounds alone, whether it can possibly hold a row satisfying a
+  * `sources.Filter`. Every bound-pruned path asks it: the DSv2
+  * pushdown scan and the [[GraftFileIndex]] native scan (which
+  * translates its Catalyst filters to the same ADT) over the commit
+  * log's per-file bounds — zero data IO — and every [[TableStore]]
+  * read and rewrite verb through the store's one prune, which also
+  * feeds it per-row-group footer bounds for files whose log carries
+  * none.
   *
   * Soundness contract: `mayContain` returns false ONLY when the
-  * logged bounds PROVE no row matches — unknown filter shapes,
-  * columns without logged stats, and null-related predicates (the log
-  * carries no null counts) all answer true. Truncated string bounds
-  * (the log's 64-char cap) only ever WIDEN a file's range, so every
-  * comparison stays conservative. The residual row filter is always
-  * re-applied by the scan, so a too-wide answer costs IO, never
-  * correctness.
+  * bounds PROVE no row matches — unknown filter shapes, columns
+  * without bounds, and null-related predicates (the log carries no
+  * null counts) all answer true. Truncated string bounds (the log's
+  * 64-char cap) only ever WIDEN a file's range, so every comparison
+  * stays conservative. The residual row filter is always re-applied
+  * by the scan, so a too-wide answer costs IO, never correctness.
   */
 object StatsSkipping {
 
-  private def asLong(v: Any): Option[Long] = v match {
+  private[graft] def asLong(v: Any): Option[Long] = v match {
     case i: java.lang.Integer => Some(i.longValue)
     case l: java.lang.Long    => Some(l.longValue)
     case s: java.lang.Short   => Some(s.longValue)
@@ -33,7 +33,7 @@ object StatsSkipping {
     case _                    => None
   }
 
-  private def asString(v: Any): Option[String] = v match {
+  private[graft] def asString(v: Any): Option[String] = v match {
     case s: String => Some(s)
     case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
     case _ => None
@@ -71,6 +71,7 @@ object StatsSkipping {
   def mayContain(e: FileEntry, f: Filter): Boolean = f match {
     case And(l, r) => mayContain(e, l) && mayContain(e, r)
     case Or(l, r)  => mayContain(e, l) || mayContain(e, r)
+    case AlwaysFalse => false
     case EqualTo(a, v) => eqTest(e, a, v)
     case EqualNullSafe(a, v) if v != null => eqTest(e, a, v)
     case In(a, vs) =>

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.Similarity
@@ -166,9 +167,15 @@ class SimilaritySpec extends SparkSpec {
     val df = Seq(
       (1L, Seq(1.0f, -0.5f, 0.25f, 0.0f)),
       (2L, Seq(0.0f, 0.0f, 0.0f, 0.0f))).toDF("id", "v")
+    // the error from an already-quantized column and its bound scale
+    def errMicro(v: Column): Column = {
+      val sc = graft.ops.Similarity.int8Scale(v)
+      graft.ops.Similarity.int8ErrMicroWith(v,
+        graft.ops.Similarity.quantizeInt8With(v, sc), sc)
+    }
     val out = df.select(col("id"),
       graft.ops.Similarity.quantizeInt8(col("v")).as("q"),
-      graft.ops.Similarity.int8ErrMicro(col("v")).as("e"))
+      errMicro(col("v")).as("e"))
       .collect().map(r => r.getLong(0) ->
         (r.getSeq[Int](1), r.getLong(2))).toMap
     // scale 1.0: q = floor(127*v) = [127, -64, 31, 0]
@@ -179,7 +186,7 @@ class SimilaritySpec extends SparkSpec {
 
     // the contract on every real vector: err <= scale/127
     val bad = Tables.embeddings(spark, TinySf).select(
-      graft.ops.Similarity.int8ErrMicro(col("embedding")).as("e"),
+      errMicro(col("embedding")).as("e"),
       floor(graft.ops.Similarity.int8Scale(col("embedding"))
         * lit(1000000.0) / lit(127.0)).cast("long").as("bound"))
       .filter(col("e") > col("bound")).count()
@@ -442,16 +449,21 @@ class SimilaritySpec extends SparkSpec {
     val books = Similarity.pqCodebooks(corpus, "vec_id", "embedding",
       m = 2, k = 2, iters = 1)
     val root = graft.TempRoots.create("graft_pqbooks")
+    // the newest committed version, read back in pqEncode's shape
+    def latest(): Seq[Seq[Seq[Long]]] =
+      spark.read.parquet(s"$root/${Similarity.listPqBooks(spark, root).last}")
+        .orderBy("sub", "cent_idx").collect().toIndexedSeq
+        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map(_._2.map(_.getSeq[Long](2).toIndexedSeq).toIndexedSeq)
     Similarity.savePqBooks(spark, books, root, "v1")
-    assert(Similarity.loadLatestPqBooks(spark, root) == books)
-    // a newer version wins; loading with nothing trained is loud
+    assert(latest() == books)
+    // a newer version wins; nothing trained lists no version
     val books2 = books.map(_.map(_.map(_ + 1L)))
     Similarity.savePqBooks(spark, books2, root, "v2")
-    assert(Similarity.loadLatestPqBooks(spark, root) == books2)
-    intercept[java.io.FileNotFoundException] {
-      Similarity.loadLatestPqBooks(spark,
-        graft.TempRoots.create("graft_pqnone"))
-    }
+    assert(latest() == books2)
+    assert(Similarity.listPqBooks(spark, root).size == 2)
+    assert(Similarity.listPqBooks(spark,
+      graft.TempRoots.create("graft_pqnone")).isEmpty)
   }
 
   test("OPQ permutation: exact variance ranking, round-robin balance") {

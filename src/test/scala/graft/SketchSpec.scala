@@ -20,6 +20,15 @@ class SketchSpec extends SparkSpec {
       .agg(countDistinct("l_orderkey").as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
+  // per-returnflag HLL sketches of the order key: the storable
+  // profile, and its roll-up of stored profiles without a rescan
+  private def hllProfile(df: org.apache.spark.sql.DataFrame) =
+    df.groupBy("l_returnflag").agg(
+      hll_sketch_agg(col("l_orderkey"), lit(Sketches.DefaultLgK)).as("sketch"))
+  private def mergeProfiles(profiles: org.apache.spark.sql.DataFrame) =
+    profiles.groupBy("l_returnflag")
+      .agg(hll_union_agg(col("sketch")).as("sketch"))
+
   private def ests(profiles: org.apache.spark.sql.DataFrame): Map[String, Long] =
     profiles.select(col("l_returnflag"),
         Sketches.estimate(col("sketch")).as("est")).collect()
@@ -35,14 +44,12 @@ class SketchSpec extends SparkSpec {
   test("union of per-slice sketches is a valid roll-up (no rescan)") {
     // four ingest batches sketched independently, merged later
     val slices = (0L to 3L).map(i =>
-      Sketches.hllProfile(li.filter(col("l_orderkey") % 4 === i),
-        Seq("l_returnflag"), "l_orderkey"))
-    val merged = Sketches.mergeProfiles(
-      slices.reduce(_ unionByName _), Seq("l_returnflag"))
+      hllProfile(li.filter(col("l_orderkey") % 4 === i)))
+    val merged = mergeProfiles(slices.reduce(_ unionByName _))
     assertWithinBound(ests(merged), "merged")
     // merged estimate tracks the whole-corpus sketch closely (they
     // differ only by promotion history, well inside the error bound)
-    val whole = ests(Sketches.hllProfile(li, Seq("l_returnflag"), "l_orderkey"))
+    val whole = ests(hllProfile(li))
     ests(merged).foreach { case (k, e) =>
       assert(math.abs(e - whole(k)) / whole(k).toDouble <= 0.02,
         s"merged vs whole drift at $k: $e vs ${whole(k)}")
@@ -51,8 +58,7 @@ class SketchSpec extends SparkSpec {
 
   test("estimate honors the bound under any partitioning") {
     for (parts <- Seq(1, 13)) {
-      val prof = Sketches.hllProfile(li.repartition(parts),
-        Seq("l_returnflag"), "l_orderkey")
+      val prof = hllProfile(li.repartition(parts))
       assertWithinBound(ests(prof), s"parts=$parts")
     }
   }

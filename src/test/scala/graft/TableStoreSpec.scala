@@ -448,44 +448,49 @@ class TableStoreSpec extends SparkSpec {
     assert(h.forall(_.getAs[Long]("n_added") == 0L))
   }
 
-  test("pointLookupString: string-key blooms skip; no-bloom files don't") {
+  test("pointLookup on string keys: blooms skip; no-bloom files don't") {
     val s = spark; import s.implicits._
     val root = tmp()
-    // two bloom-indexed files with disjoint string key sets — integer
-    // range stats can't exist for strings, so only blooms can skip
+    // two bloom-indexed files with disjoint string key sets and no
+    // statsCols: footer ranges skip a file the keys' span misses; a
+    // file inside the span only its bloom can skip
     TableStore.append(
       (0 until 500).map(i => (s"doc-a-$i", i.toLong)).toDF("k", "v")
         .coalesce(1), root, bloomCols = Seq("k"))
     TableStore.append(
       (0 until 500).map(i => (s"doc-b-$i", i.toLong)).toDF("k", "v")
         .coalesce(1), root, bloomCols = Seq("k"))
-    val (df, touched, total) = TableStore.pointLookupString(
+    val (df, touched, total) = TableStore.pointLookup(
       spark, root, "k", Seq("doc-a-42", "doc-a-411"))
     assert(total == 2 && touched == 1)
     assert(df.select("v").collect().map(_.getLong(0)).toSet ==
       Set(42L, 411L))
     // keys from both files touch both
-    val (_, t2, _) = TableStore.pointLookupString(
+    val (_, t2, _) = TableStore.pointLookup(
       spark, root, "k", Seq("doc-a-1", "doc-b-1"))
     assert(t2 == 2)
+    // a span covering both files, keys in one: the bloom skips the other
+    val (_, tb, _) = TableStore.pointLookup(
+      spark, root, "k", Seq("doc-a-42", "doc-c-9"))
+    assert(tb == 1)
     // absent keys: result exact, blooms may skip everything
-    val (miss, t3, _) = TableStore.pointLookupString(
+    val (miss, t3, _) = TableStore.pointLookup(
       spark, root, "k", Seq("doc-zzz"))
     assert(miss.count() == 0L && t3 <= 2)
     // a file written WITHOUT a bloom is never skipped
     TableStore.append(Seq(("doc-c-1", 1L)).toDF("k", "v")
       .coalesce(1), root)
-    val (hit, t4, tot4) = TableStore.pointLookupString(
+    val (hit, t4, tot4) = TableStore.pointLookup(
       spark, root, "k", Seq("doc-c-1"))
     assert(tot4 == 3 && hit.count() == 1L)
     assert(t4 >= 1, "the no-bloom file must stay unskippable")
     // probing an INT column with strings: never skips, stays exact
-    val (ints, t5, _) = TableStore.pointLookupString(
+    val (ints, t5, _) = TableStore.pointLookup(
       spark, root, "v", Seq("42"))
     assert(t5 == 3 && ints.count() == 2L) // v=42 in both a and b files
     // typos stay loud
     val ex = intercept[IllegalArgumentException] {
-      TableStore.pointLookupString(spark, root, "kk", Seq("x"))
+      TableStore.pointLookup(spark, root, "kk", Seq("x"))
     }
     assert(ex.getMessage.contains("misspelled"))
   }
@@ -511,7 +516,7 @@ class TableStoreSpec extends SparkSpec {
     val (pf, pt, ptot) = TableStore.readPrefix(spark, root, "k", "dom-a/")
     assert(ptot == 2 && pt == 1)
     assert(pf.count() == 200L)
-    val (rf, rt, _) = TableStore.readRangeString(
+    val (rf, rt, _) = TableStore.readRange(
       spark, root, "k", "dom-b/0010", "dom-b/0012")
     assert(rt == 1)
     assert(rf.select("v").collect().map(_.getLong(0)).toSet ==
@@ -546,7 +551,7 @@ class TableStoreSpec extends SparkSpec {
       .select(col("smax_vals")("k")).collect().map(_.getString(0)).sorted
     assert(mx.head == "a" * 63 + "b") // bumped, tail dropped
     assert(mx.forall(_.length <= 64))
-    val (df, t, tot) = TableStore.readRangeString(
+    val (df, t, tot) = TableStore.readRange(
       spark, root, "k", a69 + "4", a69 + "9")
     assert(tot == 2 && t == 1, "the long-key file must survive pruning")
     assert(df.select("k").collect().map(_.getString(0)).toSet ==
@@ -568,6 +573,58 @@ class TableStoreSpec extends SparkSpec {
     val (df, t, tot) = TableStore.readPrefix(spark, root, "k", "q/")
     assert(tot == 2 && t == 1)
     assert(df.count() == 50L)
+  }
+
+  test("footer fallback prunes per row group, not on the file's span") {
+    val root = tmp()
+    // no statsCols: the log carries no bounds, so the prune reads the
+    // footer. A memory check every 10 rows against a 1-byte block
+    // size cuts one file into row groups [1,10] and [101,110]
+    val keys = Seq("parquet.block.size", "parquet.page.size.row.check.min",
+      "parquet.page.size.row.check.max")
+    keys.zip(Seq("1", "10", "10")).foreach { case (k, v) => spark.conf.set(k, v) }
+    try TableStore.append(mk((1L to 10L) ++ (101L to 110L): _*).coalesce(1), root)
+    finally keys.foreach(spark.conf.unset)
+    val file = TableStore.read(spark, root).inputFiles.head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+    val groups = try reader.getFooter.getBlocks.size finally reader.close()
+    assert(groups == 2, s"fixture needs two row groups, got $groups")
+    // the gap between the row groups: a file-level [1, 110] would
+    // have to open the file
+    val (gap, t, tot) = TableStore.readRange(spark, root, "id", 50L, 60L)
+    assert(tot == 1 && t == 0 && gap.count() == 0L)
+    val (hit, t2, _) = TableStore.readRange(spark, root, "id", 105L, 200L)
+    assert(t2 == 1)
+    assert(hit.select("id").collect().map(_.getLong(0)).toSet ==
+      (105L to 110L).toSet)
+  }
+
+  test("pointLookup prunes on the span of its keys, not each key") {
+    val root = tmp()
+    // logged bounds, no bloom: keys 1 and 100 straddle [50, 60], so
+    // the file stays a candidate although it holds neither key
+    TableStore.append(mk(50L to 60L: _*).coalesce(1), root,
+      statsCols = Seq("id"))
+    val (df, touched, total) = TableStore.pointLookup(
+      spark, root, "id", Seq(1L, 100L))
+    assert(total == 1 && touched == 1 && df.count() == 0L)
+    // a span clear of the file's bounds skips it from the log alone
+    val (_, t2, _) = TableStore.pointLookup(spark, root, "id", Seq(1L, 40L))
+    assert(t2 == 0)
+  }
+
+  test("probe keys mix no key types") {
+    val root = tmp()
+    TableStore.append(mk(1L), root)
+    val ex = intercept[IllegalArgumentException] {
+      TableStore.pointLookup(spark, root, "id", Seq(1L, "1"))
+    }
+    assert(ex.getMessage.contains("all integral or all strings"))
+    intercept[IllegalArgumentException] {
+      TableStore.readRange(spark, root, "id", 1.0, 2.0)
+    }
   }
 
   test("a pre-upgrade log without string-stat maps still reads") {
@@ -1003,24 +1060,6 @@ class TableStoreSpec extends SparkSpec {
     oldDf.coalesce(1).write.parquet(leaf)
     val v = TableStore.compact(spark, root, targetBytes = 1L << 30)
     assert(TableStore.read(spark, root, Some(v)).count() == 50L)
-  }
-
-  test("vacuumOlderThan retires by publish time, always keeps latest") {
-    val root = tmp()
-    TableStore.append(mk(1), root)
-    TableStore.append(mk(2), root)
-    Thread.sleep(40)
-    val cutoff = System.currentTimeMillis()
-    Thread.sleep(40)
-    TableStore.append(mk(3), root)
-    TableStore.vacuumOlderThan(spark, root, cutoff)
-    assert(TableStore.versions(spark, root) == Seq(3L))
-    assert(ids(root) == Set(1L, 2L, 3L))
-    // a future cutoff still keeps the latest
-    TableStore.vacuumOlderThan(spark, root,
-      System.currentTimeMillis() + 60000)
-    assert(TableStore.versions(spark, root) == Seq(3L))
-    assert(ids(root) == Set(1L, 2L, 3L))
   }
 
   test("pointLookup hashes by the column's physical type (INT32 keys)") {

@@ -72,9 +72,11 @@ class ValidateSpec extends SparkSpec {
     assert(out.count() === 20)
   }
 
-  test("errorRatePct on an empty frame is 0, not NaN") {
+  test("an empty frame counts zero rows and passes a zero-threshold gate") {
     val annotated = Validate.annotate(churnish(Nil), rules)
-    assert(Validate.errorRatePct(annotated) === 0.0)
+    assert(Validate.counts(annotated) === ((0L, 0L)))
+    val (out, bad) = Validate.gateCounted(annotated, 0.0)
+    assert(bad === 0L && out.count() === 0L)
   }
 
   test("fdViolations: only violating keys surface; null-vs-value is " +
